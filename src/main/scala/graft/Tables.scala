@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge
 
 /** Parquet table readers over the driver's synthetic star schema
   * (see /root/repo/TESTDATA.md). Every query receives the scale-factor
@@ -11,8 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * push predicates and prune columns into the scan.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A table's schema comes from its parquet footer, read on the driver
+    * (FooterSchemaBridge), instead of Spark's inference job, so a table
+    * read launches no Spark job. The footer is read on every call:
+    * nothing is cached across queries. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(FooterSchemaBridge.tableSchema(spark, path)).parquet(path)
+  }
 
   /** events.parquet's `ts` has shipped as both TIMESTAMP(NANOS) and
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) across driver revisions, so

@@ -103,8 +103,11 @@ private[graft] trait DedupClusterOps extends DedupShingleOps {
       // -> LogicalRDD.fromDataset via CheckpointBridge), so the frame
       // keeps the aggregate's hash partitioning — the next round's
       // joins stay exchange-free on the label side. Accumulator
-      // exactness: count() is an action, so each partition's updates
-      // commit exactly once (task retries are deduped).
+      // exactness holds only because the tap is the last narrow step
+      // before the one count(): it runs in that job's result tasks, whose
+      // updates Spark merges once per partition, and later rounds read
+      // the checkpoint blocks instead of re-running it (the invariant is
+      // stated on CheckpointBridge).
       val changedIdx = next.schema.fieldIndex("_changed")
       val acc = sc.longAccumulator("cc_changed")
       val rows = org.apache.spark.sql.graftops.CheckpointBridge

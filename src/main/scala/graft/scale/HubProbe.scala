@@ -72,8 +72,6 @@ object HubProbe {
       scala.collection.mutable.ArrayBuffer[Long]]()
     val reads = scala.collection.concurrent.TrieMap[Int, Long]()
     val names = scala.collection.concurrent.TrieMap[Int, String]()
-    @volatile var flushed = false
-    val sentinel = "hub-probe-flush"
     val listener = new SparkListener {
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
@@ -89,7 +87,6 @@ object HubProbe {
       }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         names(sc.stageInfo.stageId) = sc.stageInfo.name.take(60)
-        if (sc.stageInfo.name.contains(sentinel)) flushed = true
       }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -104,13 +101,7 @@ object HubProbe {
     val wallSec = (System.nanoTime() - t0) / 1e9
     labels.unpersist(blocking = false)
 
-    // flush the listener bus: a final marker job, delivered in post order
-    spark.sparkContext.setCallSite(sentinel)
-    try spark.sparkContext.parallelize(1 to 1, 1).count()
-    finally spark.sparkContext.clearCallSite()
-    val deadline = System.nanoTime() + 30_000_000_000L
-    while (!flushed && System.nanoTime() < deadline) Thread.sleep(10)
-    require(flushed, "listener bus did not deliver the sentinel in 30s")
+    org.apache.spark.sql.graftops.ListenerBusBridge.drain(spark.sparkContext)
 
     def med(xs: Seq[Long]): Long = {
       val s = xs.sorted; s(s.length / 2)

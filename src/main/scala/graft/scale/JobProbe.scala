@@ -62,8 +62,8 @@ object JobProbe {
       graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      // listener bus is async; give it a beat to drain before reading
-      Thread.sleep(500)
+      // listener bus is async; read the counts only once it is empty
+      org.apache.spark.sql.graftops.ListenerBusBridge.drain(spark.sparkContext)
       println(f"QUERY $name pass$p total=$dt%.2f jobs=${jobs.size}")
       def mb(b: Long) = f"${b / 1048576.0}%.1f"
       for ((jid, wall) <- jobs.sortBy(-_._2).take(20)) {

@@ -722,6 +722,15 @@ object IncrementalSync {
       : org.apache.spark.sql.streaming.StreamingQuery =
     syncPipelineWith(updates, outDir, once = true)
 
+  /** The columns of every watermark version `syncPipelineWith` writes;
+    * [[latestWatermarks]] reads with it, so picking a version costs no
+    * schema-inference job. */
+  val WatermarkSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    StructType(Seq("tenant_id", "case_ref", "last_serialno")
+      .map(StructField(_, LongType)))
+  }
+
   private def syncPipelineWith(updates: Dataset[SnapshotUpdate],
                                outDir: String, once: Boolean)
       : org.apache.spark.sql.streaming.StreamingQuery = {
@@ -772,7 +781,8 @@ object IncrementalSync {
               .groupBy("tenant_id", "case_ref")
               .agg(max(col("last_serialno")).as("last_serialno"))
           }
-          merged.write.mode("overwrite").parquet(vPath)
+          merged.select(WatermarkSchema.map(f => col(f.name).cast(f.dataType)): _*)
+            .write.mode("overwrite").parquet(vPath)
           changes.unpersist()
           pruneWatermarks(spark, outDir, keep = 3, below = batchId)
         }
@@ -831,7 +841,7 @@ object IncrementalSync {
     // HEAD request on an object store)
     candidates
       .find(v => fs.exists(new org.apache.hadoop.fs.Path(s"$outDir/watermarks/v$v/_SUCCESS")))
-      .map(v => spark.read.parquet(s"$outDir/watermarks/v$v"))
+      .map(v => spark.read.schema(WatermarkSchema).parquet(s"$outDir/watermarks/v$v"))
   }
 
   /** Stream-stream interval join: pair each left event with right

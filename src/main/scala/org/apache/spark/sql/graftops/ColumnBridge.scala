@@ -22,7 +22,17 @@ object ColumnBridge {
   * built with `LogicalRDD.fromDataset`, exactly like
   * `Dataset.localCheckpoint`, so the checkpointed rows keep their
   * output partitioning/ordering (the loop's exchange-free joins depend
-  * on it). */
+  * on it).
+  *
+  * Accumulator-tap invariant: the tap must be the last narrow operation
+  * on the rows before the single materializing `count` of the
+  * checkpointed RDD. Then the tap runs inside that job's result tasks,
+  * and the scheduler merges a result task's accumulator updates once per
+  * partition (the first successful attempt; failed attempts' updates are
+  * dropped), so the value is exact. A shuffle after the tap would move it
+  * into a shuffle-map stage, whose re-run tasks add again; a second action
+  * on the rows before the checkpoint, or any later job that recomputes
+  * them instead of reading the checkpoint blocks, would run it twice. */
 object CheckpointBridge {
   import org.apache.spark.rdd.RDD
   import org.apache.spark.sql.catalyst.InternalRow
@@ -43,4 +53,13 @@ object CheckpointBridge {
     val logical = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, logical)
   }
+}
+
+/** The listener bus is private to the `org.apache.spark` package. Probes
+  * and tests that count jobs or stages through a SparkListener drain it
+  * before reading their counts, instead of sleeping for a guessed
+  * interval: events are delivered asynchronously. */
+object ListenerBusBridge {
+  def drain(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -155,6 +155,8 @@ class IncrementalSyncSpec extends SparkSpec {
 
       val changes = spark.read.parquet(s"$outDir/changes")
       assert(changes.count() == 3) // 2 first sights + 1 advance
+      assert(IncrementalSync.latestWatermarks(spark, outDir).get.schema ==
+        IncrementalSync.WatermarkSchema)
       val marks = IncrementalSync.latestWatermarks(spark, outDir).get
         .collect().map(r => (r.getAs[Long]("tenant_id"), r.getAs[Long]("case_ref")) ->
           r.getAs[Long]("last_serialno")).toMap
